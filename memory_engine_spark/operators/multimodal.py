@@ -2173,7 +2173,13 @@ def decode_avi_frames(payload: bytes) -> tuple[np.ndarray, int]:
     must fit inside its parent, children must tile the parent
     exactly, and a frame chunk must be exactly h*stride bytes — a
     flipped size byte therefore loud-fails instead of silently
-    resynchronizing the movi walk on garbage and dropping frames."""
+    resynchronizing the movi walk on garbage and dropping frames.
+
+    The exact-raster check runs on every frame chunk BEFORE the
+    output array is allocated: each frame is then a slice of the
+    payload, so the decoded array is bounded by ``len(payload)`` and
+    a flipped avih width/height raises ValueError instead of asking
+    for gigabytes."""
     b = payload or b""
     if len(b) < 12 or b[:4] != b"RIFF" or b[8:12] != b"AVI ":
         raise ValueError("not a RIFF/AVI payload")
@@ -2244,14 +2250,16 @@ def decode_avi_frames(payload: bytes) -> tuple[np.ndarray, int]:
             f"only uncompressed 24-bit DIB streams supported "
             f"(bpp={bpp}, compression={compression})")
     stride = (w * 3 + 3) & ~3
-    out = np.empty((len(frames), h, w, 3), dtype=np.uint8)
-    for fi, (o, sz) in enumerate(frames):
+    for fi, (_, sz) in enumerate(frames):
         # exact, not >=: an uncompressed DIB frame is h*stride bytes
         # by construction, and a size that "merely" overshoots is a
-        # desynced walk, not extra padding
+        # desynced walk, not extra padding. Checked for every frame
+        # BEFORE allocating, so (W, H) from avih can't size `out`.
         if sz != h * stride:
             raise ValueError(
                 f"frame {fi} size {sz} != DIB raster {h * stride}")
+    out = np.empty((len(frames), h, w, 3), dtype=np.uint8)
+    for fi, (o, _) in enumerate(frames):
         rows = np.frombuffer(b[o:o + h * stride], dtype=np.uint8) \
             .reshape(h, stride)[:, :w * 3]
         out[fi] = rows.reshape(h, w, 3)[:, :, ::-1][::-1]  # BGR→RGB, flip

@@ -1506,6 +1506,39 @@ def test_avi_desynced_chunk_size_loud_fails():
         multimodal.decode_avi_frames(bytes(long_riff))
 
 
+def test_avi_header_dims_cannot_size_the_allocation():
+    """Flipped avih dwWidth/dwHeight (bytes 64-71) must loud-fail
+    without allocating from the declared size: the exact-raster
+    check runs before the output array exists, so the decode's
+    traced peak stays a small multiple of the payload. numpy reports
+    even its lazy, never-touched allocations to tracemalloc, so this
+    fails on any host, however much memory it has, when the header's
+    (W, H) sizes the array first (2 x 16384 x 16384 x 3 = 1.6 GB)."""
+    import tracemalloc
+
+    import numpy as np
+    import pytest
+
+    from memory_engine_spark.operators import multimodal
+
+    blob = bytearray(multimodal.synth_avi(
+        np.zeros((2, 4, 4, 3), dtype=np.uint8), fps=4))
+    assert blob[64:72] == (4).to_bytes(4, "little") * 2
+    blob[64:68] = (1 << 14).to_bytes(4, "little")
+    blob[68:72] = (1 << 14).to_bytes(4, "little")
+    payload = bytes(blob)
+
+    tracemalloc.start()
+    try:
+        with pytest.raises(ValueError, match="DIB raster"):
+            multimodal.decode_avi_frames(payload)
+        _, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert peak <= 32 * len(payload), \
+        f"decode peaked at {peak} B for a {len(payload)} B payload"
+
+
 @settings(**SETTINGS)
 @given(n=st.integers(1, 24), salt=st.integers(0, 255),
        flip=st.integers(0, 2 ** 30), bit=st.integers(0, 7))
