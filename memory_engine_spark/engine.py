@@ -30,14 +30,15 @@ from pyspark.sql import functions as F
 
 from memory_engine_spark.operators import graph
 from memory_engine_spark.operators.merging import (
-    updated_rating, updated_truthfulness, upsert,
+    updated_rating, updated_truthfulness,
 )
 from memory_engine_spark.operators.ranking import (
     combined_score, greedy_diversity_filter, quality_rating_score, relevance_score,
 )
-from memory_engine_spark.operators.sorting import paginate
+from memory_engine_spark.operators.sorting import collect_page, slice_rows
 from memory_engine_spark.plans.compiler import (
-    clamp_depth, clamp_similarity_threshold, compile_query,
+    clamp_depth, clamp_similarity_threshold, compile_body, compile_page,
+    compile_query,
 )
 from memory_engine_spark.plans.query_spec import QuerySpec
 from memory_engine_spark.session import EngineSession
@@ -86,35 +87,25 @@ class MemoryEngine:
             "include": spec.include_fields, "group": spec.group_by,
             "aggs": [(a.op, a.field) for a in spec.aggregations],
         })
-        cached = self.s.cached(key) if use_cache else None
-        if cached is not None:
-            cdf, meta = cached
-            rows = [r.asDict(recursive=True) for r in cdf.collect()]
-            # total_count is the PRE-pagination total recorded on first
-            # execution — len(rows) is only the cached page and would
-            # silently flip has_more/next_offset on hits.
-            return QueryResponse(rows, meta.get("total_count", len(rows)),
-                                 spec.offset, spec.limit,
+        hit = self.s.cached(key) if use_cache else None
+        if hit is not None:
+            rows, total = hit
+            return QueryResponse(rows, total, spec.offset, spec.limit,
                                  ["cache hit"], from_cache=True)
 
-        df = self.s.table(spec.entity)
         t0 = time.time()
-        # offset/limit handled via paginate for total_count bookkeeping
-        spec_nolimit = QuerySpec(
-            spec.entity, spec.filters, spec.sorts, None, 0,
-            spec.include_fields, spec.exclude_fields,
-            spec.aggregations, spec.group_by, spec.having)
-        out = compile_query(df, spec_nolimit)
+        body = compile_body(self.s.table(spec.entity), spec)
         steps.append(f"filters={len(spec.filters)} sorts={len(spec.sorts)}")
-        page = paginate(out, spec.offset, spec.limit, with_total=True)
-        rows = [r.asDict(recursive=True) for r in page.df.collect()]
+        page = collect_page(body, lambda d: compile_page(d, spec),
+                            spec.offset, spec.limit)
+        rows = [r.asDict(recursive=True) for r in page.rows]
         steps.append(f"executed in {time.time() - t0:.3f}s; total={page.total_count}")
         if explain:
             # query_explainer.py analogue: step trace + the real physical
             # plan Catalyst chose
             steps.append(page.df._jdf.queryExecution().executedPlan().toString())
         if use_cache:
-            self.s.put_cache(key, page.df, {"total_count": page.total_count})
+            self.s.put_cache(key, rows, page.total_count)
         return QueryResponse(rows, page.total_count, spec.offset, spec.limit, steps)
 
     # -- ranked search (query_engine.py:334-447 + result_ranker) -------------
@@ -163,10 +154,11 @@ class MemoryEngine:
         scored = df.withColumn("combined_score",
                                F.round(combined_score(parts, weights), 6))
         scored = scored.filter(F.col("combined_score") > 0)
-        ranked = scored.orderBy(F.col("combined_score").desc(),
-                                F.col(df.columns[0]).asc())
-        page = paginate(ranked, offset, limit, with_total=True)
-        rows = [r.asDict(recursive=True) for r in page.df.collect()]
+        order = [F.col("combined_score").desc(), F.col(df.columns[0]).asc()]
+        page = collect_page(
+            scored, lambda d: slice_rows(d.orderBy(*order), offset, limit),
+            offset, limit)
+        rows = [r.asDict(recursive=True) for r in page.rows]
         if diversity_filter:
             rows = greedy_diversity_filter(rows, text_col)
         return QueryResponse(rows, page.total_count, offset, limit,
@@ -205,15 +197,17 @@ class MemoryEngine:
     # -- mutation (mcp_endpoint update_rating; rating_system.py:61-91) --------
     def update_rating(self, node_id: str, confirmation: float = 0.0,
                       contradiction: float = 0.0, richness_factor: float = 0.0):
-        nodes = self.s.table("nodes")
-        updates = (nodes.filter(F.col("node_id") == node_id).select(
-            "*",
-        ).withColumn("rating_truthfulness",
-                     updated_truthfulness(F.col("rating_truthfulness"),
-                                          F.lit(confirmation), F.lit(contradiction)))
-         .withColumn("rating_richness",
-                     updated_rating(F.col("rating_richness"), F.lit(richness_factor))))
-        merged = upsert(nodes, updates, "node_id")
+        """One projection over ``nodes``: the plan keeps a single scan
+        however many updates are applied (an anti-join upsert re-read
+        the previous plan twice per call)."""
+        hit = F.col("node_id") == node_id
+        truth, rich = F.col("rating_truthfulness"), F.col("rating_richness")
+        merged = self.s.table("nodes").withColumns({
+            "rating_truthfulness": F.when(hit, updated_truthfulness(
+                truth, F.lit(confirmation), F.lit(contradiction))).otherwise(truth),
+            "rating_richness": F.when(hit, updated_rating(
+                rich, F.lit(richness_factor))).otherwise(rich),
+        })
         self.s.register("nodes", merged)
         self.s.invalidate_cache()
         return merged

@@ -21,25 +21,28 @@ from pyspark.sql import DataFrame
 
 from memory_engine_spark.operators.aggregates import aggregate
 from memory_engine_spark.operators.filters import apply_filters
-from memory_engine_spark.operators.sorting import apply_sort
+from memory_engine_spark.operators.sorting import apply_sort, slice_rows
 from memory_engine_spark.plans.query_spec import QuerySpec
 
 
 def compile_query(df: DataFrame, spec: QuerySpec) -> DataFrame:
     """Lower a QuerySpec onto its entity DataFrame."""
-    out = apply_filters(df, spec.filters)
+    return compile_page(compile_body(df, spec), spec)
 
+
+def compile_body(df: DataFrame, spec: QuerySpec) -> DataFrame:
+    """Filters and aggregation: the rows a response's total_count counts."""
+    out = apply_filters(df, spec.filters)
     if spec.aggregations or spec.group_by:
         # Aggregation path (query_language.py:656-687); pagination/sort may
         # still apply to the aggregated rows.
         out = aggregate(out, spec.aggregations, spec.group_by, spec.having)
+    return out
 
-    out = apply_sort(out, spec.sorts)
-    if spec.offset:
-        out = out.offset(spec.offset)
-    if spec.limit is not None:
-        out = out.limit(spec.limit)
 
+def compile_page(body: DataFrame, spec: QuerySpec) -> DataFrame:
+    """Sort, offset/limit slice and projection of ``compile_body``'s rows."""
+    out = slice_rows(apply_sort(body, spec.sorts), spec.offset, spec.limit)
     if spec.include_fields:
         out = out.select(*spec.include_fields)
     elif spec.exclude_fields:

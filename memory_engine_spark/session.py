@@ -4,15 +4,19 @@ Replaces the reference's pluggable storage backends
 (/root/reference/memory_core/storage/factory.py) with a single
 Parquet-backed table registry, and its query-result cache
 (/root/reference/memory_core/query/query_cache.py:61-514) with a
-keyed DataFrame cache on top of Spark's own block-manager caching.
+keyed cache of collected responses (rows plus total_count) held on the
+driver: a hit runs no Spark job and pins no block-manager storage. The
+cache is bounded by a total row budget, dropping its oldest entries first.
 """
 
 from __future__ import annotations
 
+import copy
 import hashlib
 import json
 import os
 import time
+from collections import OrderedDict
 from typing import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -36,7 +40,14 @@ DEFAULT_CONFS = {
     "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
     "spark.ui.enabled": "false",
+    # static: read when the SparkContext starts, so it must be set here
+    "spark.ui.showConsoleProgress": "false",
 }
+
+
+# Rows the response cache holds across all entries. An entry costs at
+# least 1, so the budget also bounds the number of (empty) responses.
+CACHE_MAX_ROWS = 100_000
 
 
 def get_spark(app_name: str = "memory-engine-spark", master: str | None = None) -> SparkSession:
@@ -59,7 +70,9 @@ class EngineSession:
     def __init__(self, spark: SparkSession | None = None):
         self.spark = spark or get_spark()
         self._tables: dict[str, DataFrame] = {}
-        self._cache: dict[str, tuple[float, DataFrame]] = {}
+        # key -> (stored at, rows, total_count), oldest first
+        self._cache: OrderedDict[str, tuple[float, list[dict], int]] = OrderedDict()
+        self._cache_rows = 0
         self.cache_ttl = 3600.0  # reference default, query_types.py:106
 
     # -- table registry ----------------------------------------------------
@@ -95,28 +108,45 @@ class EngineSession:
     def cache_key(payload: dict) -> str:
         return hashlib.md5(json.dumps(payload, sort_keys=True, default=str).encode()).hexdigest()
 
-    def cached(self, key: str) -> tuple[DataFrame, dict] | None:
-        """Cache hit as (df, meta) or None. ``meta`` round-trips whatever
-        ``put_cache`` stored alongside the frame (e.g. the pre-pagination
-        total_count) — the reference's query_cache stores the whole
-        response, not just the page (query_cache.py)."""
+    def cached(self, key: str) -> tuple[list[dict], int] | None:
+        """Cache hit as (rows, total_count) or None. The reference's
+        query_cache stores the whole response, not just the page
+        (query_cache.py): the pre-pagination total_count comes back with
+        the page, as it was when ``put_cache`` stored it. The rows are a
+        fresh deep copy, so a caller mutating them cannot change a
+        later hit."""
         hit = self._cache.get(key)
         if hit is None:
             return None
-        ts, df, meta = hit
+        ts, rows, total = hit
         if time.time() - ts > self.cache_ttl:
-            df.unpersist()
-            del self._cache[key]
+            self._drop_cached(key)
             return None
-        return df, meta
+        return copy.deepcopy(rows), total
 
-    def put_cache(self, key: str, df: DataFrame,
-                  meta: dict | None = None) -> DataFrame:
-        df = df.cache()
-        self._cache[key] = (time.time(), df, dict(meta or {}))
-        return df
+    def put_cache(self, key: str, rows: list[dict], total_count: int) -> None:
+        """Store a collected response (a deep copy of ``rows``). Entries
+        are kept in the order they were stored, which is also the order
+        they expire in: expired entries are swept from the front, then the
+        oldest are dropped until the new one fits ``CACHE_MAX_ROWS``. A
+        response larger than the whole budget is not stored."""
+        self._drop_cached(key)
+        cost = max(1, len(rows))
+        if cost > CACHE_MAX_ROWS:
+            return
+        now = time.time()
+        while self._cache and (
+                now - next(iter(self._cache.values()))[0] > self.cache_ttl
+                or self._cache_rows + cost > CACHE_MAX_ROWS):
+            self._drop_cached(next(iter(self._cache)))
+        self._cache[key] = (now, copy.deepcopy(rows), total_count)
+        self._cache_rows += cost
+
+    def _drop_cached(self, key: str) -> None:
+        hit = self._cache.pop(key, None)
+        if hit is not None:
+            self._cache_rows -= max(1, len(hit[1]))
 
     def invalidate_cache(self) -> None:
-        for _, df, _meta in self._cache.values():
-            df.unpersist()
         self._cache.clear()
+        self._cache_rows = 0

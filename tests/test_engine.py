@@ -3,6 +3,8 @@ router, rating mutation, connected components."""
 
 from __future__ import annotations
 
+import time
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -257,3 +259,190 @@ def test_concurrent_engines_multi_tenant(spark, tmp_path):
     assert all(n.startswith("alpha") for n in solo_a["hit_rows"])
     assert all(n.startswith("beta") for n in solo_b["hit_rows"])
     assert solo_a["hit_from_cache"] and solo_b["hit_from_cache"]
+
+
+# -- one-job pages, driver-side response cache, single-scan rating update ----
+
+@pytest.fixture(scope="module")
+def pq_engine(spark, tmp_path_factory):
+    """Engine over parquet-attached tables: ``nodes`` (12 rows, a
+    ``tags`` array), ``rng`` (spark.range(1000)) and an empty table."""
+    import pyarrow.parquet as pq
+
+    d = tmp_path_factory.mktemp("pq_engine")
+    pq.write_table(spark.createDataFrame(
+        [(f"n{i:02d}", f"spark topic {i % 3}", ["web", "book", "blog"][i % 3],
+          1000.0 * i, 0.05 * i, 0.3, 0.5, [f"t{i % 4}", "all"])
+         for i in range(12)],
+        "node_id string, content string, source string, creation_timestamp double, "
+        "rating_richness double, rating_truthfulness double, "
+        "rating_stability double, tags array<string>",
+    ).toArrow(), str(d / "nodes.parquet"))
+    s = EngineSession(spark)
+    s.attach_dir(str(d), ["nodes"])
+    s.register("rng", spark.range(1000))
+    s.register("empty", spark.createDataFrame([], "id long, v double"))
+    return MemoryEngine(s)
+
+
+def _job_ids(spark, fn):
+    """(fn's result, ids of the Spark jobs it submitted)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"test-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30000)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _web_page():
+    return (QuerySpec("nodes").filter("source", "in", ["web", "blog"])
+            .sort("rating_richness", ascending=False).sort("node_id").page(2, 3))
+
+
+TOTAL_CASES = {
+    "sorted_limit_parquet": lambda: _web_page(),
+    "offset_past_end": lambda: QuerySpec("nodes").sort("node_id").page(50, 5),
+    "limit_zero": lambda: QuerySpec("nodes").sort("node_id").page(0, 0),
+    "filter_matches_nothing": lambda: (QuerySpec("nodes")
+                                       .filter("source", "eq", "nowhere")
+                                       .sort("node_id").page(0, 5)),
+    # Catalyst drops a limit that cannot cut a 1000-row range, leaving a
+    # global sort whose sampling pass re-reads the observed rows (a
+    # descending sort: the range is already in ascending order)
+    "range_limit_dropped": lambda: (QuerySpec("rng").sort("id", ascending=False)
+                                    .page(995, 10)),
+    "grouped_aggregate_no_limit": lambda: (QuerySpec("nodes").grouping("source")
+                                           .agg("count").sort("source")),
+    "grouped_aggregate_limit": lambda: (QuerySpec("nodes").grouping("source")
+                                        .agg("count").sort("source").page(1, 1)),
+    "no_limit_past_end": lambda: QuerySpec("nodes").sort("node_id").page(40),
+    "unsorted_limit": lambda: (QuerySpec("nodes").filter("source", "eq", "web")
+                               .page(0, 2)),
+    "empty_input": lambda: QuerySpec("empty").sort("v").page(0, 5),
+}
+
+
+@pytest.mark.parametrize("case", sorted(TOTAL_CASES))
+def test_query_total_count_is_exact(pq_engine, case):
+    from memory_engine_spark.plans.compiler import compile_body
+
+    spec = TOTAL_CASES[case]()
+    resp = pq_engine.query(spec, use_cache=False)
+    want = compile_body(pq_engine.s.table(spec.entity), spec).count()
+    assert resp.total_count == want
+    more = spec.limit is not None and spec.offset + spec.limit < want
+    assert resp.has_more == more
+    assert resp.next_offset == (spec.offset + spec.limit if more else None)
+    assert len(resp.results) == max(0, min(
+        want - spec.offset, want if spec.limit is None else spec.limit))
+
+
+def test_search_total_count_is_exact(pq_engine):
+    page = pq_engine.search("spark topic", limit=4, offset=3)
+    every = pq_engine.search("spark topic", limit=None)
+    assert page.total_count == every.total_count == len(every.results) == 12
+    assert page.results == every.results[3:7]
+    assert page.has_more and page.next_offset == 7
+
+
+def test_sorted_page_query_runs_no_count_job(spark, pq_engine):
+    resp, jobs = _job_ids(spark, lambda: pq_engine.query(_web_page(),
+                                                         use_cache=False))
+    assert len(jobs) == 1
+    assert resp.total_count == 8 and len(resp.results) == 3
+    # under adaptive execution: the aggregate's shuffle stage, then the page
+    spec = QuerySpec("nodes").grouping("source").agg("count").sort("source").page(0, 2)
+    resp, jobs = _job_ids(spark, lambda: pq_engine.query(spec, use_cache=False))
+    assert len(jobs) == 2
+    assert resp.total_count == 3 and len(resp.results) == 2
+
+
+def test_cache_hit_runs_no_job_and_pins_nothing(spark, pq_engine):
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
+    spec = QuerySpec("nodes").sort("node_id").page(0, 4)
+    first = pq_engine.query(spec, use_cache=True)
+    assert not first.from_cache and first.results[0]["tags"] == ["t0", "all"]
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
+    expected = [dict(r, tags=list(r["tags"])) for r in first.results]
+    first.results[0]["tags"].append("changed")
+    hit, jobs = _job_ids(spark, lambda: pq_engine.query(spec, use_cache=True))
+    assert hit.from_cache and jobs == []
+    assert hit.results == expected and hit.total_count == 12
+    hit.results[0]["node_id"] = "changed"
+    hit.results[1]["tags"].append("changed")
+    again = pq_engine.query(spec, use_cache=True)
+    assert again.from_cache and again.results == expected
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
+
+
+def test_response_cache_stays_bounded(spark, pq_engine, monkeypatch):
+    from memory_engine_spark import session
+
+    monkeypatch.setattr(session, "CACHE_MAX_ROWS", 10)
+    s = EngineSession(spark)
+    for i in range(100):
+        s.put_cache(f"k{i}", [{"i": i}] * 3, 3)
+        assert s._cache_rows <= 10
+    # the newest responses fit; the oldest were dropped to make room
+    assert list(s._cache) == ["k97", "k98", "k99"]
+    assert s.cached("k99") == ([{"i": 99}] * 3, 3) and s.cached("k0") is None
+    s.put_cache("huge", [{"i": 0}] * 11, 11)
+    assert s.cached("huge") is None and s._cache_rows == 9
+    # empty responses cost one row each, so their number is bounded too
+    for i in range(50):
+        s.put_cache(f"e{i}", [], 0)
+    assert len(s._cache) == 10 and s._cache_rows == 10
+    # expired entries are swept when a new one is stored
+    clock = time.time() + s.cache_ttl + 1
+    with monkeypatch.context() as m:
+        m.setattr(time, "time", lambda: clock)
+        s.put_cache("fresh", [{"i": 1}], 1)
+    assert list(s._cache) == ["fresh"] and s._cache_rows == 1
+    # through the engine: many distinct cached queries stay in budget
+    monkeypatch.setattr(session, "CACHE_MAX_ROWS", 8)
+    try:
+        for off in range(12):
+            pq_engine.query(QuerySpec("nodes").sort("node_id").page(off, 2))
+            assert pq_engine.s._cache_rows <= 8
+        assert pq_engine.query(QuerySpec("nodes").sort("node_id")
+                               .page(11, 2)).from_cache
+    finally:
+        pq_engine.s.invalidate_cache()
+
+
+def test_update_rating_keeps_one_scan(spark, tmp_path):
+    from memory_engine_spark.operators.merging import (
+        updated_rating, updated_truthfulness,
+    )
+
+    import pyarrow.parquet as pq
+
+    pq.write_table(spark.createDataFrame(
+        [("a", 0.3, 0.2), ("b", 0.6, 0.7)],
+        "node_id string, rating_truthfulness double, rating_richness double",
+    ).toArrow(), str(tmp_path / "nodes.parquet"))
+    s = EngineSession(spark)
+    s.attach_dir(str(tmp_path), ["nodes"])
+    eng = MemoryEngine(s)
+    for _ in range(5):
+        merged = eng.update_rating("a", confirmation=0.5, contradiction=0.25,
+                                   richness_factor=0.25)
+    leaves = merged._jdf.queryExecution().analyzed().collectLeaves()
+    assert leaves.size() == 1
+    assert leaves.apply(0).getClass().getSimpleName() == "LogicalRelation"
+    want = spark.createDataFrame([(0.3, 0.2)], "t double, r double")
+    for _ in range(5):
+        want = want.select(
+            updated_truthfulness(F.col("t"), F.lit(0.5), F.lit(0.25)).alias("t"),
+            updated_rating(F.col("r"), F.lit(0.25)).alias("r"))
+    t, r = want.first()
+    got = {row["node_id"]: row for row in s.table("nodes").collect()}
+    assert abs(got["a"]["rating_truthfulness"] - t) < 1e-9
+    assert abs(got["a"]["rating_richness"] - r) < 1e-9
+    assert (got["b"]["rating_truthfulness"], got["b"]["rating_richness"]) == (0.6, 0.7)

@@ -9,7 +9,9 @@ from pyspark.sql import Row
 
 from memory_engine_spark.operators.aggregates import Aggregation, aggregate, group_count
 from memory_engine_spark.operators.filters import FilterCondition
-from memory_engine_spark.operators.sorting import SortCriteria, apply_sort, paginate
+from memory_engine_spark.operators.sorting import (
+    SortCriteria, apply_sort, collect_page, slice_rows,
+)
 from memory_engine_spark.plans.compiler import (
     clamp_depth, clamp_similarity_threshold, compile_query,
 )
@@ -36,8 +38,8 @@ def test_sort_null_sentinels(spark, df):
 
 
 def test_pagination(df):
-    page = paginate(df.orderBy("id"), offset=1, limit=2, with_total=True)
-    assert [r["id"] for r in page.df.collect()] == [2, 3]
+    page = collect_page(df, lambda d: slice_rows(d.orderBy("id"), 1, 2), 1, 2)
+    assert [r["id"] for r in page.rows] == [2, 3]
     assert page.total_count == 4 and page.has_more and page.next_offset == 3
 
 
