@@ -186,11 +186,14 @@ class MemoryEngine:
     # -- graph ops -----------------------------------------------------------
     def neighbors(self, node_ids: list[str], relation_type: str | None = None,
                   direction: str = "both") -> DataFrame:
+        """One filtered scan of ``edges``; the ids travel as literals."""
         return graph.neighbors(self.s.table("edges"), node_ids, relation_type,
                                direction)
 
     def traverse(self, start_ids: list[str], max_depth: int = 2,
                  limit: int | None = None, **kw) -> DataFrame:
+        """BFS walked on the driver, one filtered edge scan per hop; the
+        result is a frame over the collected {node_id: hop_distance}."""
         depth = clamp_depth(max_depth, limit)
         return graph.k_hop(self.s.table("edges"), start_ids, depth, **kw)
 

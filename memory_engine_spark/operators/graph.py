@@ -15,18 +15,25 @@ Reference semantics:
 - merge nodes (rewrite edges, dedup): sqlite_storage.py:798-840
 
 Spark-first design (not a translation): the reference walks adjacency
-row-at-a-time in Python/Gremlin; here each BFS hop is ONE distributed
-hash join between the current frontier and the (symmetrized) edge
-table, with a left-anti join against the visited set — the classic
-iterative-dataflow formulation of BFS (GraphX/Pregel, OSDI'14). The
-loop runs on the driver but touches no data there; per-iteration
-``localCheckpoint`` truncates lineage so plans stay O(1) per hop
-instead of O(depth). At cluster scale the edge table should be
-pre-partitioned (bucketed) on ``from_id`` so every hop's join reuses
-the same partitioning and only the frontier shuffles.
+row-at-a-time in Python/Gremlin; here a lookup touches only its active
+frontier (GraphX's superstep rule, OSDI'14) and pays for one small
+Spark job per hop. ``neighbors`` is one filtered scan of the edge
+table. A BFS started from a list of ids keeps the visited map and the
+frontier on the driver; each hop is one edge scan filtered by the
+frontier as a literal id set, collected, and the driver drops the ids
+it has already seen. Only a frontier above ``LITERAL_FRONTIER_IDS``
+ids, or seeds given as a DataFrame, continue as distributed hops: one
+hash join between the frontier and the (symmetrized) edge table, with
+a left-anti join against the visited set, and a ``localCheckpoint``
+per hop so plans stay O(1) per hop instead of O(depth). At cluster
+scale the edge table should be pre-partitioned (bucketed) on
+``from_id`` so every such join reuses the same partitioning and only
+the frontier shuffles.
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -74,52 +81,103 @@ def symmetrize(edges: DataFrame) -> DataFrame:
     return edges.unionByName(rev)
 
 
-def neighbors(edges: DataFrame, node_ids: DataFrame | list[str],
+def neighbors(edges: DataFrame, node_ids: list[str],
               relation_type: str | None = None,
               direction: str = "both") -> DataFrame:
-    """1-hop neighbor ids for a set of nodes.
+    """1-hop neighbor ids for a list of nodes.
 
-    ``node_ids``: DataFrame with a ``node_id`` column, or a literal list
-    (broadcast — the reference's per-node point lookup becomes a
-    broadcast semi-join over the whole id set at once).
-    Returns (node_id, neighbor_id, relation_type).
+    One scan of ``edges`` filtered by the ids as literals (the
+    reference's per-node point lookup, for the whole id set at once).
+    Each edge is emitted once per side that matched ``direction``
+    (``out``: from_id, ``in``: to_id, ``both``: either).
+    Returns distinct (node_id, neighbor_id, relation_type).
     """
-    spark = edges.sparkSession
-    if isinstance(node_ids, list):
-        node_ids = spark.createDataFrame([(i,) for i in node_ids], "node_id string")
     if relation_type is not None:
-        edges = edges.filter(F.col("relation_type") == relation_type)  # pushed pre-join
-    e = {
-        "out": edges,
-        "in": edges.select(F.col("to_id").alias("from_id"), F.col("from_id").alias("to_id"),
-                           "relation_type"),
-        "both": symmetrize(edges.select("from_id", "to_id", "relation_type")),
-    }[direction]
+        edges = edges.filter(F.col("relation_type") == relation_type)
+    ids = [F.lit(i) for i in dict.fromkeys(node_ids)]
+    sides = {"out": [("from_id", "to_id")], "in": [("to_id", "from_id")],
+             "both": [("from_id", "to_id"), ("to_id", "from_id")]}[direction]
+    hits = [F.col(near).isin(*ids) for near, _ in sides]
+    pairs = F.array(*[
+        F.when(hit, F.struct(F.col(near).alias("node_id"),
+                             F.col(far).alias("neighbor_id")))
+        for hit, (near, far) in zip(hits, sides)])
     return (
-        e.join(F.broadcast(node_ids), e.from_id == node_ids.node_id)
-        .select("node_id", F.col("to_id").alias("neighbor_id"), "relation_type")
+        edges.filter(reduce(lambda a, b: a | b, hits))
+        .select(F.explode(pairs).alias("p"), "relation_type")
+        .filter(F.col("p").isNotNull())
+        .select("p.node_id", "p.neighbor_id", "relation_type")
         .distinct()
     )
 
 
-def k_hop(edges: DataFrame, start_ids: DataFrame | list[str], max_depth: int,
-          relation_type: str | None = None, directed: bool = False,
-          min_confidence: float | None = None) -> DataFrame:
-    """BFS to ``max_depth``; returns (node_id, hop_distance) with the
-    MINIMUM hop distance per reachable node (start nodes at 0), matching
-    the reference's visited-set BFS (sqlite_storage.py:662-699).
+# Frontier ids up to which a BFS hop filters the edge table by a literal
+# id set instead of joining a distributed frontier. The literal path
+# pays about 0.45 ms of driver-side Py4J per id to build the filter;
+# switching to distributed hops pays a fixed ~1.6 s (seed frame,
+# broadcast join, two shuffles, checkpoint). One hop over a 200k-edge
+# parquet table on a 4 vCPU host, min of 3: 1,000 ids 0.70 s literal vs
+# 1.74 s distributed, 2,000 ids 1.23 vs 1.73 s, 3,000 ids 1.50 vs 1.61 s.
+# The bound sits below that ~3,000-id break-even because a frontier that
+# large usually keeps growing, and the literal path collects every
+# matching edge's endpoints (frontier × degree rows) to the driver.
+LITERAL_FRONTIER_IDS = 2_000
 
-    Each hop = one hash join frontier⋈edges + one left-anti join vs
-    visited; early-exits when the frontier drains. localCheckpoint per
-    hop keeps lineage flat (frontiers are small relative to edges).
-    """
-    spark = edges.sparkSession
-    if isinstance(start_ids, list):
-        start_ids = spark.createDataFrame([(i,) for i in start_ids], "node_id string")
+
+def _filter_edges(edges: DataFrame, relation_type: str | None,
+                  min_confidence: float | None) -> DataFrame:
     if relation_type is not None:
         edges = edges.filter(F.col("relation_type") == relation_type)
     if min_confidence is not None:
         edges = edges.filter(F.col("confidence_score") >= min_confidence)
+    return edges
+
+
+def _far_ends(edges: DataFrame, frontier: list, directed: bool) -> list:
+    """One filtered edge scan: the far endpoint of every edge whose near
+    endpoint is in ``frontier`` (from_id → to_id when ``directed``).
+    Undirected, both ends of each matching edge come back; the near one
+    is a frontier id, which the caller has already visited."""
+    ids = [F.lit(i) for i in frontier]
+    hit = F.col("from_id").isin(*ids)
+    ends = ["to_id"]
+    if not directed:
+        hit, ends = hit | F.col("to_id").isin(*ids), ["from_id", "to_id"]
+    return [v for row in edges.filter(hit).select(*ends).collect() for v in row]
+
+
+def _bfs(edges: DataFrame, start_ids: list, max_depth: int, directed: bool,
+         stop_at: str | None = None) -> dict | DataFrame:
+    """BFS from a list of ids with the visited map and the frontier on
+    the driver, one ``_far_ends`` scan per hop; stops when the frontier
+    drains, at ``max_depth`` or once ``stop_at`` is reached. Returns
+    {node_id: hop_distance}, or, when a frontier outgrows
+    ``LITERAL_FRONTIER_IDS``, the (node_id, hop_distance) frame of the
+    walk continued by ``_bfs_joins`` from the driver state."""
+    dist = dict.fromkeys(start_ids, 0)
+    frontier = list(dist)
+    for depth in range(max_depth):
+        if not frontier or (stop_at is not None and stop_at in dist):
+            break
+        if len(frontier) > LITERAL_FRONTIER_IDS:
+            visited = edges.sparkSession.createDataFrame(
+                list(dist.items()), "node_id string, hop_distance int")
+            return _bfs_joins(edges, visited, depth, len(frontier), max_depth,
+                              directed, stop_at)
+        frontier = [i for i in dict.fromkeys(_far_ends(edges, frontier, directed))
+                    if i not in dist]
+        dist.update(dict.fromkeys(frontier, depth + 1))
+    return dist
+
+
+def _bfs_joins(edges: DataFrame, visited: DataFrame, depth: int,
+               n_frontier: int, max_depth: int, directed: bool,
+               stop_at: str | None = None) -> DataFrame:
+    """Distributed BFS hops ``depth``+1 … ``max_depth`` over ``visited``
+    (node_id, hop_distance), whose rows at ``depth`` (``n_frontier`` of
+    them) are the frontier. Each hop = one hash join frontier⋈edges +
+    one left-anti join vs visited; early-exits when the frontier drains
+    or contains ``stop_at``. localCheckpoint per hop keeps lineage flat."""
     # Cache the DIRECTED edge list once (narrowest form): the edge table
     # may be a derived plan (unions, distincts) that must not recompute
     # per hop. The symmetrized view is a cheap union over the cached
@@ -130,11 +188,10 @@ def k_hop(edges: DataFrame, start_ids: DataFrame | list[str], max_depth: int,
     if cached_here:
         base = base.persist()
     adj = base if directed else symmetrize(base)
+    frontier = visited.filter(F.col("hop_distance") == depth)
+    prev_frontier = visited.filter(F.col("hop_distance") == depth - 1)
     try:
-        visited = start_ids.select("node_id", F.lit(0).alias("hop_distance")).transform(_lc)
-        frontier, n_frontier = visited, visited.count()
-        prev_frontier = None
-        for depth in range(1, max_depth + 1):
+        for hop in range(depth + 1, max_depth + 1):
             if directed:
                 # arbitrary back-edges: must exclude the FULL visited set
                 seen = visited.select("node_id")
@@ -144,8 +201,7 @@ def k_hop(edges: DataFrame, start_ids: DataFrame | list[str], max_depth: int,
                 # anti-join needs only the LAST TWO frontiers (the
                 # GraphFrames/Pregel BFS trick). Ships O(|f_d|+|f_{d-1}|)
                 # rows instead of the whole O(|V|) visited set per hop.
-                seen = (frontier.select("node_id") if prev_frontier is None
-                        else frontier.select("node_id")
+                seen = (frontier.select("node_id")
                         .unionByName(prev_frontier.select("node_id")))
             nxt = (
                 adj.join(_maybe_broadcast(frontier, n_frontier),
@@ -161,7 +217,7 @@ def k_hop(edges: DataFrame, start_ids: DataFrame | list[str], max_depth: int,
                 # frontier-sized seen set ships, and AQE still converts
                 # to broadcast at runtime without the pushdown.
                 .join(seen, "node_id", "left_anti")
-                .withColumn("hop_distance", F.lit(depth))
+                .withColumn("hop_distance", F.lit(hop))
                 # lazy checkpoint + count = ONE job per hop: the count
                 # action materializes the checkpoint blocks as it runs,
                 # instead of an eager-checkpoint job followed by a
@@ -177,12 +233,38 @@ def k_hop(edges: DataFrame, start_ids: DataFrame | list[str], max_depth: int,
             # grows by one node per hop over cached blocks, which is flat
             # lineage for any practical max_depth.
             visited = visited.unionByName(nxt)
-            prev_frontier = frontier
-            frontier = nxt
+            if stop_at is not None and \
+                    not nxt.filter(F.col("node_id") == stop_at).isEmpty():
+                break
+            prev_frontier, frontier = frontier, nxt
         return visited
     finally:
         if cached_here:
             base.unpersist()
+
+
+def k_hop(edges: DataFrame, start_ids: DataFrame | list[str], max_depth: int,
+          relation_type: str | None = None, directed: bool = False,
+          min_confidence: float | None = None) -> DataFrame:
+    """BFS to ``max_depth``; returns (node_id, hop_distance) with the
+    MINIMUM hop distance per reachable node (start nodes at 0), matching
+    the reference's visited-set BFS (sqlite_storage.py:662-699).
+
+    Seeds given as a list walk on the driver (``_bfs``): one filtered
+    edge scan per hop, no join, persist or checkpoint, and the result is
+    built from the driver's visited map. Seeds given as a DataFrame
+    (a ``node_id`` column), and any walk whose frontier outgrows
+    ``LITERAL_FRONTIER_IDS``, take distributed hops (``_bfs_joins``).
+    """
+    edges = _filter_edges(edges, relation_type, min_confidence)
+    if isinstance(start_ids, DataFrame):
+        visited = start_ids.select("node_id", F.lit(0).alias("hop_distance")).transform(_lc)
+        return _bfs_joins(edges, visited, 0, visited.count(), max_depth, directed)
+    reached = _bfs(edges, start_ids, max_depth, directed)
+    if isinstance(reached, DataFrame):
+        return reached
+    return edges.sparkSession.createDataFrame(
+        list(reached.items()), "node_id string, hop_distance int")
 
 
 def k_hop_paths(edges: DataFrame, start_ids: DataFrame | list[str], max_depth: int,
@@ -238,36 +320,13 @@ def k_hop_paths(edges: DataFrame, start_ids: DataFrame | list[str], max_depth: i
 def shortest_path_length(edges: DataFrame, src: str, dst: str, max_hops: int = 6,
                          directed: bool = False) -> int | None:
     """Unweighted shortest-path length src→dst (sqlite_storage.py:571-616).
-    BFS with early exit on first reach; None if not within max_hops."""
-    spark = edges.sparkSession
-    cached_here = not _is_cached(edges)
-    base = edges.select("from_id", "to_id")
-    if cached_here:
-        base = base.persist()
-    adj = base if directed else symmetrize(base)
-    try:
-        visited = spark.createDataFrame([(src,)], "node_id string").transform(_lc)
-        frontier, n_frontier = visited, 1
-        for depth in range(1, max_hops + 1):
-            nxt = (
-                adj.join(_maybe_broadcast(frontier, n_frontier),
-                         adj.from_id == frontier.node_id)
-                .select(F.col("to_id").alias("node_id"))
-                .distinct()
-                .join(visited, "node_id", "left_anti")
-                .transform(_lc)
-            )
-            n_frontier = nxt.count()
-            if n_frontier == 0:
-                return None
-            if not nxt.filter(F.col("node_id") == dst).isEmpty():
-                return depth
-            visited = visited.unionByName(nxt).transform(_lc)
-            frontier = nxt
-        return None
-    finally:
-        if cached_here:
-            base.unpersist()
+    The ``k_hop`` walk from ``src``, stopped at the hop that first
+    reaches ``dst``; None if not within max_hops (or if dst is src)."""
+    reached = _bfs(edges, [src], max_hops, directed, stop_at=dst)
+    if isinstance(reached, DataFrame):
+        row = reached.filter(F.col("node_id") == dst).first()
+        return row["hop_distance"] if row else None
+    return reached.get(dst) or None
 
 
 def degrees(edges: DataFrame) -> DataFrame:

@@ -446,3 +446,37 @@ def test_update_rating_keeps_one_scan(spark, tmp_path):
     assert abs(got["a"]["rating_truthfulness"] - t) < 1e-9
     assert abs(got["a"]["rating_richness"] - r) < 1e-9
     assert (got["b"]["rating_truthfulness"], got["b"]["rating_richness"]) == (0.6, 0.7)
+
+
+def test_graph_lookups_run_few_jobs_and_pin_nothing(spark, tmp_path):
+    """A request-sized traverse or neighbors lookup is one filtered edge
+    scan per hop: no join stages, no count action, and no persisted or
+    checkpointed RDD outlives the call while its result is held."""
+    import pyarrow.parquet as pq
+
+    pq.write_table(spark.createDataFrame(
+        [("g0", "g1", "R", 0.9), ("g1", "g2", "R", 0.8), ("g2", "g3", "S", 0.7),
+         ("g4", "g0", "S", 0.6), ("g5", "g6", "R", 0.5)],
+        "from_id string, to_id string, relation_type string, confidence_score double",
+    ).toArrow(), str(tmp_path / "edges.parquet"))
+    s = EngineSession(spark)
+    s.attach_dir(str(tmp_path), ["edges"])
+    eng = MemoryEngine(s)
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = persistent().size()
+
+    def run(lookup):
+        df = lookup()
+        return df, df.collect()
+
+    (walk, rows), jobs = _job_ids(spark, lambda: run(lambda: eng.traverse(["g0"], 2)))
+    assert len(jobs) <= 3
+    assert {r["node_id"]: r["hop_distance"] for r in rows} == {
+        "g0": 0, "g1": 1, "g4": 1, "g2": 2}
+    assert persistent().size() == before
+    (near, rows), jobs = _job_ids(spark, lambda: run(lambda: eng.neighbors(["g0", "g2"])))
+    assert len(jobs) <= 2
+    assert {(r["node_id"], r["neighbor_id"]) for r in rows} == {
+        ("g0", "g1"), ("g0", "g4"), ("g2", "g1"), ("g2", "g3")}
+    assert persistent().size() == before
+    assert walk.count() == 4 and near.count() == 4

@@ -68,6 +68,123 @@ def test_shortest_path(edges):
     assert graph.shortest_path_length(edges, "a", "x1") is None  # disconnected
 
 
+# -- driver-held walk vs distributed hops vs plain Python -------------------
+
+# ids that a literal must carry as data, never as SQL text
+ODD_IDS = ["o'brien", 'say "hi"', "back\\slash", "a,b", "ünï", "日本", "é'\\\""]
+
+
+def _random_graph(seed: int = 7, n: int = 300):
+    import random
+
+    rng = random.Random(seed)
+    ids = [f"v{i}" for i in range(n - len(ODD_IDS))] + ODD_IDS
+    rows = []
+    for _ in range(2 * n):
+        a, b = rng.choice(ids), rng.choice(ids)
+        rows.append((a, b, rng.choice("RS"), round(rng.random(), 3)))
+    for a, b, _, _ in rows[:40]:                 # parallel edges
+        rows.append((a, b, rng.choice("RS"), round(rng.random(), 3)))
+    for a, b, _, _ in rows[40:80]:               # both orientations
+        rows.append((b, a, rng.choice("RS"), round(rng.random(), 3)))
+    rows += [(ODD_IDS[i], ODD_IDS[i + 1], "R", 0.9) for i in range(len(ODD_IDS) - 1)]
+    return ids, rows
+
+
+def _py_bfs(rows, seeds, depth, directed, rel, conf):
+    adj: dict = {}
+    for a, b, r, c in rows:
+        if (rel is None or r == rel) and (conf is None or c >= conf):
+            adj.setdefault(a, set()).add(b)
+            if not directed:
+                adj.setdefault(b, set()).add(a)
+    dist = dict.fromkeys(seeds, 0)
+    frontier = set(dist)
+    for d in range(1, depth + 1):
+        frontier = {n for u in frontier for n in adj.get(u, ())} - set(dist)
+        dist.update(dict.fromkeys(frontier, d))
+    return dist
+
+
+@pytest.fixture(scope="module")
+def random_graph(spark):
+    ids, rows = _random_graph()
+    df = spark.createDataFrame(
+        rows, "from_id string, to_id string, relation_type string, "
+              "confidence_score double").persist()
+    yield ids, rows, df
+    df.unpersist()
+
+
+def _seed_lists(ids):
+    return [[ids[0]], [ODD_IDS[0], ODD_IDS[2]], [ids[5], ids[5], ODD_IDS[4]],
+            ["no-such-id", ids[9]], [], ["no-such-id"], ODD_IDS]
+
+
+# each case walks depths 0-3 from seed lists starting at ``first``
+@pytest.mark.parametrize("directed,rel,conf,first", [
+    (False, None, None, 0), (False, "R", None, 4), (False, None, 0.5, 1),
+    (True, None, None, 3), (True, "R", None, 2), (True, None, 0.5, 5)])
+def test_k_hop_walks_agree_with_python_bfs(spark, random_graph, monkeypatch,
+                                           directed, rel, conf, first):
+    """The literal walk, a switch to distributed hops before the first
+    hop (bound 0) and mid-walk (bound 2), and DataFrame seeds all give
+    the plain-Python BFS."""
+    ids, rows, edges = random_graph
+    seed_lists = _seed_lists(ids)
+    for depth in range(4):
+        seeds = seed_lists[(first + depth) % len(seed_lists)]
+        want = _py_bfs(rows, seeds, depth, directed, rel, conf)
+
+        def run(start):
+            out = graph.k_hop(edges, start, depth, relation_type=rel,
+                              directed=directed, min_confidence=conf).collect()
+            assert len(out) == len({r["node_id"] for r in out})
+            return {r["node_id"]: r["hop_distance"] for r in out}
+
+        assert run(seeds) == want, ("literal", depth, seeds)
+        for bound in (0, 2):
+            with monkeypatch.context() as m:
+                m.setattr(graph, "LITERAL_FRONTIER_IDS", bound)
+                assert run(seeds) == want, (bound, depth, seeds)
+        # a seed frame lists each id once: k_hop keeps every seed row
+        seed_df = spark.createDataFrame([(s,) for s in seeds], "node_id string")
+        assert run(seed_df.distinct()) == want, ("dataframe", depth, seeds)
+
+
+@pytest.mark.parametrize("direction", ["out", "in", "both"])
+def test_neighbors_agree_with_python(random_graph, direction):
+    ids, rows, edges = random_graph
+    for rel in (None, "R"):
+        for seeds in _seed_lists(ids):
+            want = set()
+            for a, b, r, _ in rows:
+                if rel is not None and r != rel:
+                    continue
+                if direction in ("out", "both") and a in seeds:
+                    want.add((a, b, r))
+                if direction in ("in", "both") and b in seeds:
+                    want.add((b, a, r))
+            out = graph.neighbors(edges, seeds, rel, direction).collect()
+            got = {(r["node_id"], r["neighbor_id"], r["relation_type"]) for r in out}
+            assert len(out) == len(got) and got == want, (direction, rel, seeds)
+
+
+def test_shortest_path_agrees_with_python_bfs(random_graph, monkeypatch):
+    ids, rows, edges = random_graph
+    pairs = [(ids[0], ids[1]), (ODD_IDS[0], ODD_IDS[-1]), (ids[3], "no-such-id"),
+             (ids[4], ids[4]), (ids[10], ODD_IDS[3])]
+    cases = [(graph.LITERAL_FRONTIER_IDS, directed, pair)
+             for directed in (False, True) for pair in pairs]
+    cases += [(1, False, pair) for pair in pairs[:3]]   # switch mid-walk
+    for bound, directed, (src, dst) in cases:
+        monkeypatch.setattr(graph, "LITERAL_FRONTIER_IDS", bound)
+        d = _py_bfs(rows, [src], 3, directed, None, None).get(dst)
+        got = graph.shortest_path_length(edges, src, dst, max_hops=3,
+                                         directed=directed)
+        assert got == (d or None), (bound, directed, src, dst)
+
+
 def test_degrees(edges):
     d = {r["node_id"]: (r["out_degree"], r["in_degree"], r["degree"])
          for r in graph.degrees(edges).collect()}
