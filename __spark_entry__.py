@@ -1049,10 +1049,10 @@ def q44_date_range(spark, sf):
 
 
 def q45_simhash32(spark, sf):
-    """32-bit md5-SimHash near-dup pairs — the SimHash sketch built from
-    cross-engine-identical primitives so the WHOLE sketch pipeline
-    (token hash → bit votes → pack → chunk-blocked hamming join) is
-    oracle-checked, not just rows-only like the 64-bit xxhash variant."""
+    """32-bit md5-SimHash near-dup pairs — the one-word form of q15's
+    sketch, built from cross-engine-identical primitives so the WHOLE
+    sketch pipeline (token hash → bit votes → pack → chunk-blocked
+    hamming join) is oracle-checked, not rows-only."""
     t = _t(spark, sf)
     return dedup.simhash32_neardup(t["documents"], "text", "doc_id",
                                    max_hamming=3)

@@ -93,26 +93,6 @@ def group_count(df: DataFrame, group_by: Sequence[str]) -> DataFrame:
 # Canned analytics reports (enhanced_mcp_endpoint.py:1278-1589)
 # ---------------------------------------------------------------------------
 
-def coverage_by_source(df: DataFrame, source_col: str, quality_col: str,
-                       content_col: str) -> DataFrame:
-    """Knowledge-coverage analytics (enhanced_mcp_endpoint.py:1278-1361):
-    per-source counts, high/medium-quality bins (≥0.8 / ≥0.6), content
-    length min/max/avg."""
-    return (
-        df.groupBy(source_col)
-        .agg(
-            F.count(F.lit(1)).alias("n_items"),
-            F.sum(F.when(F.col(quality_col) >= 0.8, 1).otherwise(0)).alias("n_high_quality"),
-            F.sum(
-                F.when((F.col(quality_col) >= 0.6) & (F.col(quality_col) < 0.8), 1).otherwise(0)
-            ).alias("n_medium_quality"),
-            F.min(F.length(content_col)).alias("min_len"),
-            F.max(F.length(content_col)).alias("max_len"),
-            F.round(F.avg(F.length(content_col)), 4).alias("avg_len"),
-        )
-    )
-
-
 def quality_histogram(df: DataFrame, rating_col: str, bins: int = 5) -> DataFrame:
     """Quality-score analytics (enhanced_mcp_endpoint.py:1426-1497): avg +
     N-bin histogram of a rating dimension. Bin = floor(score·bins), score

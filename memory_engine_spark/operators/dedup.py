@@ -12,22 +12,28 @@ This module generalizes those to the training-data-pipeline dedup suite
 - exact: one groupBy on a normalized content hash — the cheapest
   possible plan (map-side partial agg, one shuffle on the hash).
 - n-gram Jaccard: explode shingles → equi-join on shingle → count
-  common → Jaccard. Only pairs sharing ≥1 shingle materialize, so for
-  τ > 0 this is EXACT yet never a cross join. Frequency-capped
-  shingles (stop-shingle removal) bound worst-case skew.
-- MinHash+LSH: per-doc signature (k independent xxhash64 draws), bands
-  hashed to buckets, candidates = within-bucket pairs, verified with
+  common → Jaccard (``_pair_jaccard``, the one exact set-Jaccard join,
+  shared with discovery's SIMILAR_TAGS / SIMILAR_CONTENT). Only pairs
+  sharing ≥1 shingle materialize, so for τ > 0 this is EXACT yet never
+  a cross join. Frequency-capped shingles (stop-shingle removal) bound
+  worst-case skew.
+- MinHash+LSH: per-doc signature (k hash draws per shingle: xxhash64
+  seeds or md5-derived universal hashes), each band keyed on its
+  signature slice, candidates = within-bucket pairs, verified with
   exact Jaccard. Candidate generation is an equi-join on
-  (band, band_hash) — per-bucket quadratic, globally near-linear.
-- SimHash: 64-bit sign-sum fingerprint; near-dup candidates block on
-  16-bit chunks (any hamming-≤3 pair shares at least one of 4 chunks),
-  verified by popcount of XOR.
+  (band, band_key) — per-bucket quadratic, globally near-linear.
+- SimHash: per-bit sign votes of md5(token) words packed into one
+  (32-bit) or two (64-bit) 32-bit words; near-dup candidates block on
+  8-bit chunks (a pair within hamming h < n_chunks shares at least one
+  chunk), verified by popcount of XOR.
 
 Everything is built-in Column expressions (higher-order functions,
-xxhash64, bitwise ops) — no Python in the hot path.
+xxhash64, md5, bitwise ops) — no Python in the hot path.
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -115,8 +121,29 @@ def explode_shingles(df: DataFrame, text_col: str, id_col: str, n: int = 3) -> D
 
 
 # ---------------------------------------------------------------------------
-# exact n-gram Jaccard pair join
+# exact set-Jaccard pair join
 # ---------------------------------------------------------------------------
+
+def _pair_jaccard(ex: DataFrame, key_col: str) -> DataFrame:
+    """Given exploded (_id, key) rows — DISTINCT per id — return unordered
+    pairs (a, b, jaccard), a < b. One groupBy for set sizes, one
+    equi-join on the key, one groupBy for intersections: exact Jaccard
+    for any threshold > 0 (a qualifying pair shares a key), never a
+    cross join. ``ex`` feeds three plan branches (sizes + both join
+    sides), so callers pass it persisted and own its release."""
+    sizes = ex.groupBy("_id").agg(F.count(F.lit(1)).alias("sz"))
+    ex = ex.join(sizes.hint("broadcast"), "_id")
+    a = ex.select(F.col("_id").alias("a"), F.col("sz").alias("sz_a"), key_col)
+    b = ex.select(F.col("_id").alias("b"), F.col("sz").alias("sz_b"), key_col)
+    common = (
+        a.join(b, key_col)
+        .filter(F.col("a") < F.col("b"))
+        .groupBy("a", "b", "sz_a", "sz_b")
+        .agg(F.count(F.lit(1)).alias("common"))
+    )
+    jac = F.col("common") / (F.col("sz_a") + F.col("sz_b") - F.col("common"))
+    return common.select("a", "b", jac.alias("jaccard"))
+
 
 def ngram_jaccard_pairs(df: DataFrame, text_col: str, id_col: str,
                         n: int = 3, threshold: float = 0.4,
@@ -134,25 +161,10 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str, id_col: str,
         hot = (ex.groupBy("shingle").agg(F.count(F.lit(1)).alias("f"))
                .filter(F.col("f") > max_shingle_freq).select("shingle"))
         ex = ex.join(hot, "shingle", "left_anti")
-    # The exploded shingle set feeds three plan branches (sizes + both
-    # join sides); persist so tokenize/explode runs once, not 3×. The
-    # small pair result is materialized eagerly and the big intermediate
-    # released before returning.
+    # persist so tokenize/explode runs once, not 3×; the small pair
+    # result is materialized eagerly and the big intermediate released
     cached = ex.persist()
-    ex = cached
-    sizes = ex.groupBy("_id").agg(F.count(F.lit(1)).alias("sz"))
-    ex = ex.join(sizes.hint("broadcast"), "_id")  # shingle rows distinct per doc
-
-    a = ex.select(F.col("_id").alias("a"), F.col("sz").alias("sz_a"), "shingle")
-    b = ex.select(F.col("_id").alias("b"), F.col("sz").alias("sz_b"), "shingle")
-    common = (
-        a.join(b, "shingle")
-        .filter(F.col("a") < F.col("b"))
-        .groupBy("a", "b", "sz_a", "sz_b")
-        .agg(F.count(F.lit(1)).alias("common"))
-    )
-    jac = F.col("common") / (F.col("sz_a") + F.col("sz_b") - F.col("common"))
-    out = (common.withColumn("jaccard", jac)
+    out = (_pair_jaccard(cached, "shingle")
            .filter(F.col("jaccard") >= threshold)
            .select("a", "b", F.round("jaccard", 6).alias("jaccard")))
     return _materialize_release(out, cached)
@@ -162,110 +174,34 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str, id_col: str,
 # MinHash + LSH
 # ---------------------------------------------------------------------------
 
-def minhash_signature(df: DataFrame, text_col: str, id_col: str,
-                      num_hashes: int = 64, n: int = 3) -> DataFrame:
-    """(id, sig array<bigint>): per-doc MinHash signature. One explode +
-    one groupBy; the k hash draws are xxhash64(shingle, seed_i) computed
-    JVM-side in a single projection."""
-    ex = explode_shingles(df, text_col, id_col, n)
-    mins = [F.min(F.xxhash64("shingle", F.lit(i))).alias(f"h{i}") for i in range(num_hashes)]
-    agg = ex.groupBy("_id").agg(*mins)
-    return agg.select(F.col("_id").alias("id"),
-                      F.array(*[f"h{i}" for i in range(num_hashes)]).alias("sig"))
+def _minhash_pairs(df: DataFrame, text_col: str, id_col: str,
+                   threshold: float, num_hashes: int, bands: int, n: int,
+                   words: list, draw, band_key) -> DataFrame:
+    """The MinHash-LSH pipeline both public variants share: signature
+    aggregate → banded self equi-join → distinct candidates → exact
+    ``collect_set`` Jaccard check. ``words`` are per-shingle Columns
+    projected once; ``draw(i)`` is the i-th hash draw over them and
+    ``band_key(cols)`` keys a band from its r signature columns.
 
-
-def lsh_candidates(sig_df: DataFrame, bands: int = 16) -> DataFrame:
-    """Band the signatures and emit candidate pairs (a, b), a<b, that
-    collide in ≥1 band. Join key is (band, hash-of-band-slice)."""
-    num_hashes = len(sig_df.select("sig").first()["sig"])
-    r = num_hashes // bands
-    banded = sig_df.select(
-        "id",
-        F.explode(F.transform(
-            F.sequence(F.lit(0), F.lit(bands - 1)),
-            lambda bidx: F.struct(
-                bidx.alias("band"),
-                F.xxhash64(F.concat_ws(",", F.slice("sig", bidx * r + 1, r).cast("array<string>")))
-                .alias("bh"),
-            ),
-        )).alias("bk"),
-    ).select("id", "bk.band", "bk.bh")
-    l = banded.select(F.col("id").alias("a"), "band", "bh")
-    rr = banded.select(F.col("id").alias("b"), "band", "bh")
-    return (l.join(rr, ["band", "bh"]).filter(F.col("a") < F.col("b"))
-            .select("a", "b").distinct())
-
-
-def minhash_neardup(df: DataFrame, text_col: str, id_col: str,
-                    threshold: float = 0.7, num_hashes: int = 64,
-                    bands: int = 16, n: int = 3) -> DataFrame:
-    """MinHash-LSH near-dup pairs, verified with EXACT Jaccard so output
-    contains no false positives (candidates are a recall-only
-    approximation). Returns (a, b, jaccard)."""
-    ex = explode_shingles(df, text_col, id_col, n).persist()
-    mins = [F.min(F.xxhash64("shingle", F.lit(i))).alias(f"h{i}")
-            for i in range(num_hashes)]
-    sig = (ex.groupBy("_id").agg(*mins)
-           .select(F.col("_id").alias("id"),
-                   F.array(*[f"h{i}" for i in range(num_hashes)]).alias("sig")))
-    cand = lsh_candidates(sig, bands)
-    docs = ex.groupBy("_id").agg(F.collect_set("shingle").alias("sh"),
-                                 F.count(F.lit(1)).alias("sz"))
-    cand = (
-        cand.join(docs.select(F.col("_id").alias("a"), F.col("sh").alias("sh_a"),
-                              F.col("sz").alias("sz_a")), "a")
-        .join(docs.select(F.col("_id").alias("b"), F.col("sh").alias("sh_b"),
-                          F.col("sz").alias("sz_b")), "b")
-    )
-    common = F.size(F.array_intersect("sh_a", "sh_b"))
-    jac = common / (F.col("sz_a") + F.col("sz_b") - common)
-    out = (cand.withColumn("jaccard", jac)
-           .filter(F.col("jaccard") >= threshold)
-           .select("a", "b", F.round("jaccard", 6).alias("jaccard")))
-    return _materialize_release(out, ex)
-
-
-def _md5_word(col, pos: int):
-    """32-bit unsigned int from 8 hex chars of md5(col) starting at
-    1-based ``pos``. Built only from md5/substring/base-conversion so the
-    identical value is reproducible in ANSI SQL / DuckDB (the q45
-    portability trick)."""
-    return F.conv(F.substring(F.md5(col), pos, 8), 16, 10).cast("long")
-
-
-def minhash_md5_neardup(df: DataFrame, text_col: str, id_col: str,
-                        threshold: float = 0.7, num_hashes: int = 64,
-                        bands: int = 32, n: int = 3) -> DataFrame:
-    """MinHash+LSH near-dup pairs — same sketch/banding pipeline as
-    ``minhash_neardup`` but with md5-derived universal-hash draws
-    (Broder-style: h_i(s) = (w1 + i·w2) mod 2³², where w1/w2 are the two
-    32-bit words of md5(s)) and band keys that are the plain
-    comma-joined signature slice, so EVERY stage (signature, banding,
-    candidate join, exact-Jaccard verify) is reproducible in DuckDB and
-    the whole operator is oracle-checkable, not rows-only. One md5 per
-    shingle; the k draws are cheap integer arithmetic.
-
-    Identical LSH guarantees: candidates = pairs colliding in ≥1 band,
-    verified with exact Jaccard (no false positives). One explode + one
-    groupBy + one banded equi-join — never a cross join.
-    """
+    Candidates are the pairs colliding in ≥1 band, verified with exact
+    Jaccard, so the output has no false positives (banding only
+    trades recall). One explode + one groupBy + one banded equi-join —
+    never a cross join."""
+    if not 1 <= bands <= num_hashes:
+        # r = num_hashes // bands would be 0: every band key is the
+        # empty slice and every pair becomes a candidate
+        raise ValueError(f"bands must be in [1, num_hashes={num_hashes}]")
     r = num_hashes // bands
     ex = explode_shingles(df, text_col, id_col, n).persist()
 
-    w1 = _md5_word(F.col("shingle"), 1)
-    w2 = _md5_word(F.col("shingle"), 9)
-    words = ex.select("_id", w1.alias("w1"), w2.alias("w2"))
-    mask = F.lit((1 << 32) - 1).cast("long")
-    sig = words.groupBy("_id").agg(
-        *[F.min((F.col("w1") + F.lit(i) * F.col("w2")).bitwiseAND(mask))
-          .alias(f"h{i}") for i in range(num_hashes)])
+    sig = ex.select("_id", *words).groupBy("_id").agg(
+        *[F.min(draw(i)).alias(f"h{i}") for i in range(num_hashes)])
     banded = sig.select(
         F.col("_id").alias("id"),
         F.explode(F.array(*[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.concat_ws(",", *[F.col(f"h{b * r + j}").cast("string")
-                                   for j in range(r)]).alias("bk"))
+            F.struct(F.lit(b).alias("band"),
+                     band_key([F.col(f"h{b * r + j}") for j in range(r)])
+                     .alias("bk"))
             for b in range(bands)
         ])).alias("x"),
     ).select("id", "x.band", "x.bk")
@@ -290,191 +226,143 @@ def minhash_md5_neardup(df: DataFrame, text_col: str, id_col: str,
     return _materialize_release(out, ex)
 
 
+def _slice_string(cols):
+    """A band's signature slice as its comma-joined decimal string."""
+    return F.concat_ws(",", *[c.cast("string") for c in cols])
+
+
+def minhash_neardup(df: DataFrame, text_col: str, id_col: str,
+                    threshold: float = 0.7, num_hashes: int = 64,
+                    bands: int = 16, n: int = 3) -> DataFrame:
+    """MinHash-LSH near-dup pairs, verified with EXACT Jaccard so output
+    contains no false positives (candidates are a recall-only
+    approximation). The k draws are xxhash64(shingle, seed_i); a band
+    is keyed on the xxhash64 of its slice. Returns (a, b, jaccard)."""
+    return _minhash_pairs(
+        df, text_col, id_col, threshold, num_hashes, bands, n,
+        words=[F.col("shingle")],
+        draw=lambda i: F.xxhash64("shingle", F.lit(i)),
+        band_key=lambda cols: F.xxhash64(_slice_string(cols)))
+
+
+def _md5_word(col, pos: int):
+    """32-bit unsigned int from 8 hex chars of md5(col) starting at
+    1-based ``pos``. Built only from md5/substring/base-conversion so the
+    identical value is reproducible in ANSI SQL / DuckDB (the q45
+    portability trick)."""
+    return F.conv(F.substring(F.md5(col), pos, 8), 16, 10).cast("long")
+
+
+def minhash_md5_neardup(df: DataFrame, text_col: str, id_col: str,
+                        threshold: float = 0.7, num_hashes: int = 64,
+                        bands: int = 32, n: int = 3) -> DataFrame:
+    """MinHash+LSH near-dup pairs — the ``minhash_neardup`` pipeline with
+    md5-derived universal-hash draws (Broder-style: h_i(s) = (w1 + i·w2)
+    mod 2³², where w1/w2 are the two 32-bit words of md5(s)) and band
+    keys that are the plain comma-joined signature slice, so EVERY stage
+    (signature, banding, candidate join, exact-Jaccard verify) is
+    reproducible in DuckDB and the whole operator is oracle-checkable,
+    not rows-only. One md5 per shingle; the k draws are cheap integer
+    arithmetic. Returns (a, b, jaccard)."""
+    mask = F.lit((1 << 32) - 1).cast("long")
+    return _minhash_pairs(
+        df, text_col, id_col, threshold, num_hashes, bands, n,
+        words=[_md5_word(F.col("shingle"), 1).alias("w1"),
+               _md5_word(F.col("shingle"), 9).alias("w2")],
+        draw=lambda i: (F.col("w1") + F.lit(i) * F.col("w2")).bitwiseAND(mask),
+        band_key=_slice_string)
+
+
 # ---------------------------------------------------------------------------
-# SimHash
+# SimHash over md5 words (oracle-portable: 32 or 2 × 32 bits)
 # ---------------------------------------------------------------------------
 
-def simhash(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """64-bit SimHash per doc: sign of the per-bit weighted sum of token
-    hashes. Pure expressions: explode tokens → per-bit ±1 sums → pack.
-    Returns (id, simhash bigint)."""
+def _simhash_md5(df: DataFrame, text_col: str, id_col: str,
+                 words: dict[str, int]) -> DataFrame:
+    """SimHash fingerprint words: for each output column, the sign of
+    the per-bit ±1 vote over the 32-bit md5(token) word at that hex
+    offset, packed into a non-negative long. Built only from
+    cross-engine-identical primitives (md5, substring, base-16
+    conversion, shifts), so the whole sketch is oracle-checkable.
+    ``words`` maps output column → 1-based hex offset. Returns
+    (id, *words)."""
     narrow = _spread(df.select(F.col(id_col).alias("id"), F.col(text_col).alias("_txt")))
     toks = narrow.select("id", F.explode(tokens(F.col("_txt"))).alias("tok"))
-    h = toks.withColumn("h", F.xxhash64("tok"))
+    h = toks.select("id", *[_md5_word(F.col("tok"), pos).alias(f"_{w}")
+                            for w, pos in words.items()])
     bit_sums = h.groupBy("id").agg(*[
-        F.sum(F.when(F.shiftright(F.col("h"), i).bitwiseAND(F.lit(1)) == 1, 1)
-              .otherwise(-1)).alias(f"b{i}")
-        for i in range(64)
-    ])
-    # Bit 63 contributes -(2^63): adding it to the non-negative low 63
-    # bits yields the two's-complement long with the sign bit set, so the
-    # fingerprint is genuinely 64-bit.
-    addends = [
-        F.when(F.col(f"b{i}") > 0,
-               F.lit(-(1 << 63) if i == 63 else (1 << i)).cast("long"))
-        .otherwise(F.lit(0).cast("long"))
-        for i in range(64)
-    ]
-    packed = bit_sums.select(
-        "id", sum(addends, start=F.lit(0).cast("long")).alias("simhash"))
-    return packed
-
-
-def hamming64(a, b):
-    return F.bit_count(F.col(a).bitwiseXOR(F.col(b)))
-
-
-def simhash32_md5(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """32-bit SimHash using md5-derived token hashes — functionally the
-    same sketch as ``simhash`` but built ONLY from operations that exist
-    identically in ANSI SQL/DuckDB (md5, hex→int, bit shifts), so the
-    whole operator is oracle-checkable cross-engine. Returns
-    (id, simhash32 long)."""
-    narrow = _spread(df.select(F.col(id_col).alias("id"), F.col(text_col).alias("_txt")))
-    toks = narrow.select("id", F.explode(tokens(F.col("_txt"))).alias("tok"))
-    h = toks.withColumn("h", F.conv(F.substring(F.md5("tok"), 1, 8), 16, 10)
-                        .cast("long"))
-    bit_sums = h.groupBy("id").agg(*[
-        F.sum(F.when(F.shiftright(F.col("h"), b).bitwiseAND(F.lit(1)) == 1, 1)
-              .otherwise(-1)).alias(f"b{b}")
-        for b in range(32)
-    ])
-    packed = bit_sums.select(
-        "id",
-        sum((F.when(F.col(f"b{b}") > 0, F.lit(1 << b).cast("long"))
+        F.sum(F.when(F.shiftright(F.col(f"_{w}"), b).bitwiseAND(F.lit(1)) == 1, 1)
+              .otherwise(-1)).alias(f"{w}_{b}")
+        for w in words for b in range(32)])
+    return bit_sums.select("id", *[
+        sum((F.when(F.col(f"{w}_{b}") > 0, F.lit(1 << b).cast("long"))
              .otherwise(F.lit(0).cast("long")) for b in range(32)),
-            start=F.lit(0).cast("long")).alias("simhash32"),
-    )
-    return packed
+            start=F.lit(0).cast("long")).alias(w)
+        for w in words])
 
 
-def simhash32_neardup(df: DataFrame, text_col: str, id_col: str,
-                      max_hamming: int = 3) -> DataFrame:
-    """Near-dup pairs by 32-bit md5-SimHash hamming ≤ max_hamming (≤ 3):
-    4 chunks of 8 bits — any pair within hamming 3 shares ≥1 chunk
-    (pigeonhole), so candidates come from an equi-join on
-    (chunk_idx, chunk_value). Returns (a, b, hamming)."""
-    sh = simhash32_md5(df, text_col, id_col)
-    chunks = sh.select(
-        "id", "simhash32",
-        F.explode(F.array(*[
-            F.struct(F.lit(ci).alias("ci"),
-                     F.shiftrightunsigned("simhash32", ci * 8)
-                     .bitwiseAND(F.lit(255)).alias("cv"))
-            for ci in range(4)
-        ])).alias("c"),
-    ).select("id", "simhash32", "c.ci", "c.cv")
-    l = chunks.select(F.col("id").alias("a"), F.col("simhash32").alias("sa"),
-                      "ci", "cv")
-    r = chunks.select(F.col("id").alias("b"), F.col("simhash32").alias("sb"),
-                      "ci", "cv")
-    return (
-        l.join(r, ["ci", "cv"]).filter(F.col("a") < F.col("b"))
-        .select("a", "b", F.bit_count(F.col("sa").bitwiseXOR(F.col("sb")))
-                .cast("long").alias("hamming")).distinct()
-        .filter(F.col("hamming") <= max_hamming)
-    )
-
-
-def simhash_neardup(df: DataFrame, text_col: str, id_col: str,
-                    max_hamming: int = 3) -> DataFrame:
-    """Near-dup pairs by SimHash hamming distance ≤ max_hamming.
-
-    Blocking: split the 64-bit fingerprint into ``max_hamming + 1``
-    near-equal contiguous chunks — a pair within hamming h differs in at
-    most h chunks, so with h+1 chunks at least one chunk is identical
-    (pigeonhole) and recall is EXACT. The join is an equi-join on
-    (chunk_idx, chunk_value), never a cross join. Requires
-    max_hamming ≤ 31 (chunks need ≥2 bits to prune)."""
-    if not 0 <= max_hamming <= 31:
-        raise ValueError("max_hamming must be in [0, 31]")
-    n_chunks = max_hamming + 1
-    bounds = [round(64 * j / n_chunks) for j in range(n_chunks + 1)]
-
-    def chunk_val(j: int):
-        width = bounds[j + 1] - bounds[j]
-        if width >= 64:  # max_hamming=0: the chunk IS the fingerprint
-            return F.col("simhash")
-        return (F.shiftrightunsigned("simhash", bounds[j])
-                .bitwiseAND(F.lit((1 << width) - 1)))
-
-    sh = simhash(df, text_col, id_col)
-    chunks = sh.select(
-        "id", "simhash",
-        F.explode(F.array(*[
-            F.struct(F.lit(j).alias("ci"), chunk_val(j).alias("cv"))
-            for j in range(n_chunks)
-        ])).alias("c"),
-    ).select("id", "simhash", "c.ci", "c.cv")
-    l = chunks.select(F.col("id").alias("a"), F.col("simhash").alias("sa"), "ci", "cv")
-    r = chunks.select(F.col("id").alias("b"), F.col("simhash").alias("sb"), "ci", "cv")
-    return (
-        l.join(r, ["ci", "cv"]).filter(F.col("a") < F.col("b"))
-        .select("a", "b", hamming64("sa", "sb").alias("hamming")).distinct()
-        .filter(F.col("hamming") <= max_hamming)
-    )
-
-
-# ---------------------------------------------------------------------------
-# 64-bit md5-SimHash (oracle-portable: 2 × 32-bit words)
-# ---------------------------------------------------------------------------
-
-def simhash64_md5(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """64-bit SimHash carried as TWO 32-bit words (lo, hi) built from
-    md5(token) hex chars 1-8 / 9-16 — the same sketch as ``simhash`` but
-    from cross-engine-identical primitives (md5, substring, base-16
-    conversion, shifts), and split into two non-negative words so no
-    two's-complement sign games are needed in SQL. Returns
-    (id, sh_lo long, sh_hi long)."""
-    narrow = _spread(df.select(F.col(id_col).alias("id"), F.col(text_col).alias("_txt")))
-    toks = narrow.select("id", F.explode(tokens(F.col("_txt"))).alias("tok"))
-    h = toks.select("id", _md5_word(F.col("tok"), 1).alias("hl"),
-                    _md5_word(F.col("tok"), 9).alias("hh"))
-    bit_sums = h.groupBy("id").agg(
-        *[F.sum(F.when(F.shiftright(F.col("hl"), b).bitwiseAND(F.lit(1)) == 1, 1)
-                .otherwise(-1)).alias(f"l{b}") for b in range(32)],
-        *[F.sum(F.when(F.shiftright(F.col("hh"), b).bitwiseAND(F.lit(1)) == 1, 1)
-                .otherwise(-1)).alias(f"g{b}") for b in range(32)],
-    )
-    pack = lambda pfx: sum(  # noqa: E731
-        (F.when(F.col(f"{pfx}{b}") > 0, F.lit(1 << b).cast("long"))
-         .otherwise(F.lit(0).cast("long")) for b in range(32)),
-        start=F.lit(0).cast("long"))
-    return bit_sums.select("id", pack("l").alias("sh_lo"), pack("g").alias("sh_hi"))
-
-
-def simhash64_md5_neardup(df: DataFrame, text_col: str, id_col: str,
-                          max_hamming: int = 6) -> DataFrame:
-    """Near-dup pairs by 64-bit md5-SimHash hamming ≤ max_hamming (≤ 7):
-    8 chunks of 8 bits (4 from each word) — pigeonhole guarantees a pair
-    within hamming 7 shares ≥1 chunk, so candidates come from an
-    equi-join on (chunk_idx, chunk_value). hamming =
-    popcount(lo⊕lo) + popcount(hi⊕hi). Fully oracle-checkable (q15).
-    Returns (a, b, hamming)."""
-    if not 0 <= max_hamming <= 7:
-        raise ValueError("max_hamming must be in [0, 7] (8 chunks of 8 bits)")
-    sh = simhash64_md5(df, text_col, id_col)
+def _simhash_chunk_join(sh: DataFrame, words: list[str],
+                        max_hamming: int) -> DataFrame:
+    """Near-dup pairs (a, b, hamming ≤ max_hamming) over fingerprints
+    carried as 32-bit ``words``. Each word splits into 4 chunks of 8
+    bits; a pair within hamming h differs in at most h chunks, so with
+    h < n_chunks it shares ≥1 chunk (pigeonhole) and candidates from an
+    equi-join on (chunk_idx, chunk_value) have EXACT recall. hamming =
+    Σ popcount(word_a ⊕ word_b)."""
+    n_chunks = 4 * len(words)
+    if not 0 <= max_hamming < n_chunks:
+        raise ValueError(f"max_hamming must be in [0, {n_chunks - 1}] "
+                         f"({n_chunks} chunks of 8 bits)")
     chunk = [
         F.struct(F.lit(ci).alias("ci"),
-                 F.shiftrightunsigned("sh_lo" if ci < 4 else "sh_hi",
-                                      (ci % 4) * 8)
+                 F.shiftrightunsigned(words[ci // 4], (ci % 4) * 8)
                  .bitwiseAND(F.lit(255)).alias("cv"))
-        for ci in range(8)
+        for ci in range(n_chunks)
     ]
-    chunks = (sh.select("id", "sh_lo", "sh_hi",
-                        F.explode(F.array(*chunk)).alias("c"))
-              .select("id", "sh_lo", "sh_hi", "c.ci", "c.cv"))
-    l = chunks.select(F.col("id").alias("a"), F.col("sh_lo").alias("la"),
-                      F.col("sh_hi").alias("ha"), "ci", "cv")
-    r = chunks.select(F.col("id").alias("b"), F.col("sh_lo").alias("lb"),
-                      F.col("sh_hi").alias("hb"), "ci", "cv")
-    ham = (F.bit_count(F.col("la").bitwiseXOR(F.col("lb")))
-           + F.bit_count(F.col("ha").bitwiseXOR(F.col("hb")))).cast("long")
+    chunks = (sh.select("id", *words, F.explode(F.array(*chunk)).alias("c"))
+              .select("id", *words, "c.ci", "c.cv"))
+    l = chunks.select(F.col("id").alias("a"),
+                      *[F.col(w).alias(f"{w}_a") for w in words], "ci", "cv")
+    r = chunks.select(F.col("id").alias("b"),
+                      *[F.col(w).alias(f"{w}_b") for w in words], "ci", "cv")
+    ham = reduce(lambda x, y: x + y, (
+        F.bit_count(F.col(f"{w}_a").bitwiseXOR(F.col(f"{w}_b")))
+        for w in words)).cast("long")
     return (
         l.join(r, ["ci", "cv"]).filter(F.col("a") < F.col("b"))
         .select("a", "b", ham.alias("hamming")).distinct()
         .filter(F.col("hamming") <= max_hamming)
     )
+
+
+def simhash32_md5(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """32-bit md5-SimHash (md5(token) hex chars 1-8). Returns
+    (id, simhash32 long)."""
+    return _simhash_md5(df, text_col, id_col, {"simhash32": 1})
+
+
+def simhash32_neardup(df: DataFrame, text_col: str, id_col: str,
+                      max_hamming: int = 3) -> DataFrame:
+    """Near-dup pairs by 32-bit md5-SimHash hamming ≤ max_hamming (≤ 3,
+    4 chunks of 8 bits). Returns (a, b, hamming)."""
+    return _simhash_chunk_join(simhash32_md5(df, text_col, id_col),
+                               ["simhash32"], max_hamming)
+
+
+def simhash64_md5(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """64-bit md5-SimHash carried as TWO non-negative 32-bit words built
+    from md5(token) hex chars 1-8 / 9-16, so no two's-complement sign
+    games are needed in SQL. Returns (id, sh_lo long, sh_hi long)."""
+    return _simhash_md5(df, text_col, id_col, {"sh_lo": 1, "sh_hi": 9})
+
+
+def simhash64_md5_neardup(df: DataFrame, text_col: str, id_col: str,
+                          max_hamming: int = 6) -> DataFrame:
+    """Near-dup pairs by 64-bit md5-SimHash hamming ≤ max_hamming (≤ 7,
+    8 chunks of 8 bits, 4 from each word). Fully oracle-checkable (q15).
+    Returns (a, b, hamming)."""
+    return _simhash_chunk_join(simhash64_md5(df, text_col, id_col),
+                               ["sh_lo", "sh_hi"], max_hamming)
 
 
 # ---------------------------------------------------------------------------

@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from memory_engine_spark.operators.dedup import tokens, _spread
+from memory_engine_spark.operators.dedup import _pair_jaccard, _spread, tokens
 from memory_engine_spark.operators.text import STOPWORDS
 
 TAG_JACCARD_THRESHOLD = 0.3       # relationship_extractor.py:264
@@ -33,27 +33,6 @@ CONTENT_JACCARD_THRESHOLD = 0.4   # relationship_extractor.py:324
 SAME_SOURCE_CONFIDENCE = 0.7      # relationship_extractor.py:347
 SAME_DOMAIN_CONFIDENCE = 0.8      # relationship_extractor.py:779
 TEMPORAL_WINDOW_S = 3600.0        # relationship_extractor.py:363
-
-
-def _pair_jaccard(ex: DataFrame, id_col: str = "_id",
-                  key_col: str = "k") -> DataFrame:
-    """Given exploded (id, key) rows — DISTINCT per id — return unordered
-    pairs (a, b, jaccard). One groupBy for set sizes, one equi-join on
-    the key, one groupBy for intersections: exact Jaccard for any
-    threshold > 0, never a cross join."""
-    ex = ex.persist()
-    sizes = ex.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
-    ex_s = ex.join(sizes.hint("broadcast"), id_col)
-    a = ex_s.select(F.col(id_col).alias("a"), F.col("sz").alias("sz_a"), key_col)
-    b = ex_s.select(F.col(id_col).alias("b"), F.col("sz").alias("sz_b"), key_col)
-    common = (
-        a.join(b, key_col)
-        .filter(F.col("a") < F.col("b"))
-        .groupBy("a", "b", "sz_a", "sz_b")
-        .agg(F.count(F.lit(1)).alias("common"))
-    )
-    jac = F.col("common") / (F.col("sz_a") + F.col("sz_b") - F.col("common"))
-    return common.select("a", "b", jac.alias("jaccard"))
 
 
 def similar_tags(df: DataFrame, tags_col: str, id_col: str,
@@ -67,7 +46,7 @@ def similar_tags(df: DataFrame, tags_col: str, id_col: str,
             F.filter(F.split(F.col(tags_col), ","), lambda x: x != ""))).alias("k"),
     )
     return (
-        _pair_jaccard(ex)
+        _pair_jaccard(ex.persist(), "k")
         .filter(F.col("jaccard") > threshold)
         .select("a", "b", F.lit("SIMILAR_TAGS").alias("relation_type"),
                 F.round("jaccard", 6).alias("confidence"))
@@ -84,7 +63,7 @@ def similar_content(df: DataFrame, text_col: str, id_col: str,
     narrow = _spread(df.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_txt")))
     ex = narrow.select("_id", F.explode(words).alias("k"))
     return (
-        _pair_jaccard(ex)
+        _pair_jaccard(ex.persist(), "k")
         .filter(F.col("jaccard") > threshold)
         .select("a", "b", F.lit("SIMILAR_CONTENT").alias("relation_type"),
                 F.round("jaccard", 6).alias("confidence"))

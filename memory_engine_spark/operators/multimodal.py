@@ -3199,18 +3199,6 @@ def sample_frames(df: DataFrame, every_s: float = 1.0,
                             lambda i: i * F.lit(every_s))).alias("frame_ts")))
 
 
-def size_budget_repartition(df: DataFrame, bytes_col_expr=None,
-                            target_partition_bytes: int = 128 << 20) -> DataFrame:
-    """Repartition media rows to a byte budget: rows are huge and skewed,
-    so row-count partitioning under-uses or OOMs executors. One pass
-    computes total bytes; partitions = ceil(total/target)."""
-    size_col = bytes_col_expr if bytes_col_expr is not None \
-        else F.length(F.col("payload"))
-    total = df.agg(F.sum(size_col)).first()[0] or 0
-    parts = max(1, int(-(-total // target_partition_bytes)))
-    return df.repartition(parts)
-
-
 # ---------------------------------------------------------------------------
 # REAL header probing (no codec libraries needed — pure byte parsing)
 # ---------------------------------------------------------------------------

@@ -76,16 +76,6 @@ def combined_score(parts: dict[str, Column], weights: dict[str, float] | None = 
     return out
 
 
-def rank_results(df: DataFrame, score: Column, limit: int | None = None,
-                 tiebreak: str | None = None) -> DataFrame:
-    out = df.withColumn("combined_score", F.round(score, 6))
-    order = [F.col("combined_score").desc()]
-    if tiebreak:
-        order.append(F.col(tiebreak).asc())
-    out = out.orderBy(*order)
-    return out.limit(limit) if limit is not None else out
-
-
 def greedy_diversity_filter(rows: list[dict], text_key: str,
                             max_similarity: float = 0.7) -> list[dict]:
     """Driver-side greedy MMR-style filter over an already-ranked page

@@ -68,41 +68,6 @@ def crossjoin_topk(embeddings: DataFrame, queries: DataFrame, k: int,
 # IVF-style coarse index (the scale path; Milvus IVF_FLAT analogue)
 # ---------------------------------------------------------------------------
 
-def build_ivf(embeddings: DataFrame, nlist: int = 64, seed: int = 42,
-              id_col: str = "node_id", vec_col: str = "embedding",
-              iters: int = 1) -> tuple[DataFrame, DataFrame]:
-    """Build (centroids, assigned) where centroids=(cell, centroid) and
-    assigned=(id, vec, cell). Centroids start from a deterministic
-    sample and take ``iters`` Lloyd refinement passes — each pass is one
-    broadcast-join + one groupBy (mean of member vectors), all built-in.
-    One pass suffices for the coarse quantizer (the probe step re-scores
-    exactly inside the probed cells, so centroid quality only affects
-    recall, not correctness).
-    """
-    n = embeddings.count()
-    frac = min(1.0, (nlist * 4) / max(n, 1))
-    seeds = (
-        embeddings.sample(frac, seed=seed).limit(nlist)
-        .select(F.monotonically_increasing_id().alias("cell"),
-                F.col(vec_col).cast("array<double>").alias("centroid"))
-    )
-    # densify cell ids 0..nlist-1
-    seeds = seeds.select(
-        (F.row_number().over(Window.orderBy("cell")) - 1).alias("cell"), "centroid")
-    centroids = seeds.transform(_lc)
-    dim = len(centroids.select("centroid").first()[0])
-    for _ in range(iters):
-        assigned = _assign(embeddings, centroids, id_col, vec_col)
-        agg = assigned.groupBy("cell").agg(
-            *[F.avg(F.col(vec_col).cast("array<double>")[i]).alias(f"c{i}")
-              for i in range(dim)]
-        )
-        centroids = agg.select(
-            "cell", F.array(*[F.col(f"c{i}") for i in range(dim)]).alias("centroid")
-        ).transform(_lc)
-    return centroids, _assign(embeddings, centroids, id_col, vec_col)
-
-
 def build_ivf_flat(embeddings: DataFrame, nlist: int = 64,
                    id_col: str = "node_id", vec_col: str = "embedding"
                    ) -> tuple[DataFrame, DataFrame]:

@@ -79,17 +79,6 @@ def write_any(df: DataFrame, path: str, fmt: str | None = None,
     writer.format(fmt).save(path)
 
 
-def avro_available(spark: SparkSession) -> bool:
-    """spark-avro is an external package; probe the classpath instead
-    of failing mid-write."""
-    try:
-        spark._jvm.java.lang.Class.forName(
-            "org.apache.spark.sql.avro.AvroFileFormat")
-        return True
-    except Exception:
-        return False
-
-
 def compact(spark: SparkSession, path: str, target_files: int,
             fmt: str | None = None) -> None:
     """Rewrite a directory into ``target_files`` files (small-files
@@ -1907,18 +1896,6 @@ def parquet_read_int32_column(payload: bytes, col: str) -> list:
     b = payload or b""
     return _parquet_read_column_ranged(lambda off, ln: b[off:off + ln],
                                        len(b), col, ptype=1)
-
-
-def parquet_read_int32_column_file(path: str, col: str,
-                                   tail_hint: int = 65536,
-                                   open_fn=open) -> list:
-    """Scale path for INT32 reads — same I/O budget model as the
-    INT64/string `_file` readers."""
-    with open_fn(path, "rb") as f:
-        f.seek(0, 2)
-        size = f.tell()
-        return _parquet_read_column_ranged(_reader_at(f), size, col,
-                                           tail_hint, ptype=1)
 
 
 def _parquet_read_int64_ranged(read_at, size: int, col: str,

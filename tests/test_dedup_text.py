@@ -50,12 +50,56 @@ def test_minhash_matches_exact_jaccard_pairs(docs):
 
 
 def test_simhash_identical_and_near(docs):
-    sh = {r["id"]: r["simhash"] for r in dedup.simhash(docs, "body", "doc_id").collect()}
-    assert sh[1] == sh[2]  # normalization-identical docs
+    """Normalization-identical docs get equal fingerprint words and
+    hamming 0, in both the 64-bit and the 32-bit sketch; every reported
+    hamming is the popcount of the words' XOR."""
+    sh64 = {r["id"]: (r["sh_lo"], r["sh_hi"]) for r in
+            dedup.simhash64_md5(docs, "body", "doc_id").collect()}
+    assert sh64[1] == sh64[2]
+    sh32 = {r["id"]: r["simhash32"] for r in
+            dedup.simhash32_md5(docs, "body", "doc_id").collect()}
+    assert sh32[1] == sh32[2]
     pairs = {(r["a"], r["b"]): r["hamming"] for r in
-             dedup.simhash_neardup(docs, "body", "doc_id", max_hamming=10).collect()}
+             dedup.simhash32_neardup(docs, "body", "doc_id").collect()}
     assert pairs[(1, 2)] == 0
-    assert (1, 3) in pairs  # one word changed → small hamming
+    for (a, b), ham in pairs.items():
+        assert ham == bin(sh32[a] ^ sh32[b]).count("1")
+
+
+def test_minhash_rejects_bands_outside_num_hashes(docs):
+    """bands > num_hashes leaves r = 0 rows per band: every band key is
+    the empty slice and every pair becomes a candidate."""
+    for fn in (dedup.minhash_neardup, dedup.minhash_md5_neardup):
+        for bands in (17, 0):
+            with pytest.raises(ValueError, match="bands"):
+                fn(docs, "body", "doc_id", num_hashes=16, bands=bands)
+
+
+def test_simhash_rejects_max_hamming_without_pigeonhole(docs):
+    """Recall is exact only while max_hamming < the chunk count (4 for
+    32 bits, 8 for 64 bits); beyond it pairs would be lost silently."""
+    for fn, n_chunks in ((dedup.simhash32_neardup, 4),
+                         (dedup.simhash64_md5_neardup, 8)):
+        for bad in (n_chunks, -1):
+            with pytest.raises(ValueError, match="max_hamming"):
+                fn(docs, "body", "doc_id", max_hamming=bad)
+
+
+@pytest.mark.parametrize("fn", [dedup.minhash_neardup,
+                                dedup.minhash_md5_neardup])
+def test_minhash_result_is_the_only_cache_left(spark, fn):
+    """The shingle frame is released inside the call; the returned
+    result is the one cached frame, and unpersisting it removes all the
+    call added. (Set differences: earlier tests' checkpoints may be
+    cleaned up meanwhile.)"""
+    df = spark.createDataFrame(DOCS[:5], "doc_id int, body string")
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(persisted().keySet())
+    res = fn(df, "body", "doc_id", threshold=0.5)
+    assert len(set(persisted().keySet()) - before) == 1
+    assert res.is_cached and (1, 2) in {(r["a"], r["b"]) for r in res.collect()}
+    res.unpersist(True)
+    assert set(persisted().keySet()) - before == set()
 
 
 def test_shingles_short_doc(spark):
@@ -123,27 +167,45 @@ def test_simhash64_md5_neardup_recall_vs_brute(docs):
 
 
 def test_simhash_packs_bit_63(spark):
-    """Some fingerprint across many one-token docs must set the sign bit
-    (bit 63) — the packing is genuinely 64-bit."""
+    """Some fingerprint across many one-token docs must set bit 63 (bit
+    31 of ``sh_hi``), and bit 31 of ``sh_lo`` — the packing uses all 64
+    bits and keeps each word a non-negative 32-bit value."""
     df = spark.createDataFrame(
         [(i, f"tok{i}") for i in range(40)], "doc_id int, body string")
-    vals = [r["simhash"] for r in dedup.simhash(df, "body", "doc_id").collect()]
-    assert any(v < 0 for v in vals), "bit 63 never set across 40 one-token docs"
+    rows = dedup.simhash64_md5(df, "body", "doc_id").collect()
+    for w in ("sh_lo", "sh_hi"):
+        assert all(0 <= r[w] < 1 << 32 for r in rows)
+        assert any(r[w] >> 31 for r in rows), f"bit 31 of {w} never set"
 
 
-def test_simhash_neardup_chunk_count_guarantee(docs):
-    """max_hamming=6 must use 7 chunks: candidates == brute force."""
-    sh = {r["id"]: r["simhash"] for r in
-          dedup.simhash(docs, "body", "doc_id").collect()}
+def test_simhash_neardup_chunk_count_guarantee(spark):
+    """32-bit twin of the 64-bit recall test: at max_hamming=3 the 4
+    chunk candidates must equal the brute-force hamming join over
+    seeded near-duplicate docs (many pairs at hamming 1-3)."""
+    import random
+
+    rng = random.Random(7)
+    vocab = [f"w{i}" for i in range(30)]
+    bases = [[rng.choice(vocab) for _ in range(12)] for _ in range(6)]
+    rows = []
+    for i in range(60):
+        toks = list(bases[i % 6])
+        for _ in range(rng.randrange(3)):
+            toks[rng.randrange(len(toks))] = rng.choice(vocab)
+        rows.append((i, " ".join(toks)))
+    df = spark.createDataFrame(rows, "doc_id int, body string")
+    sh = {r["id"]: r["simhash32"] for r in
+          dedup.simhash32_md5(df, "body", "doc_id").collect()}
     ids = sorted(sh)
     brute = set()
     for i, a in enumerate(ids):
         for b in ids[i + 1:]:
-            x = (sh[a] ^ sh[b]) & ((1 << 64) - 1)
-            if bin(x).count("1") <= 6:
-                brute.add((a, b))
-    got = {(r["a"], r["b"]) for r in dedup.simhash_neardup(
-        docs, "body", "doc_id", max_hamming=6).collect()}
+            ham = bin(sh[a] ^ sh[b]).count("1")
+            if ham <= 3:
+                brute.add((a, b, ham))
+    assert {h for *_, h in brute} == {0, 1, 2, 3}
+    got = {(r["a"], r["b"], r["hamming"]) for r in dedup.simhash32_neardup(
+        df, "body", "doc_id", max_hamming=3).collect()}
     assert got == brute
 
 
@@ -198,11 +260,11 @@ def test_decontamination_flags_exact_window_overlap(spark):
 
 
 def test_simhash_neardup_max_hamming_zero(docs):
-    """max_hamming=0 degrades to an exact-fingerprint join (single
-    64-bit chunk) instead of overflowing the chunk mask."""
-    pairs = {(r["a"], r["b"]) for r in dedup.simhash_neardup(
-        docs, "body", "doc_id", max_hamming=0).collect()}
-    assert pairs == {(1, 2)}  # the normalization-identical docs
+    """max_hamming=0 keeps only equal fingerprints, in both widths."""
+    for fn in (dedup.simhash32_neardup, dedup.simhash64_md5_neardup):
+        pairs = {(r["a"], r["b"]) for r in fn(
+            docs, "body", "doc_id", max_hamming=0).collect()}
+        assert pairs == {(1, 2)}  # the normalization-identical docs
 
 
 def test_redact_pii_and_counts(spark):

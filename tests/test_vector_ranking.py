@@ -93,7 +93,8 @@ def test_srp_lsh_neardup(spark):
 
 
 def test_ivf_finds_neighbors(vecs):
-    cents, assigned = similarity.build_ivf(vecs, nlist=2, id_col="id", vec_col="v")
+    cents, assigned = similarity.build_ivf_flat(vecs, nlist=2, id_col="id",
+                                                vec_col="v")
     top = similarity.topk_ivf(assigned, cents, [0.95, 0.05, 0.0], k=2, nprobe=2,
                               id_col="id", vec_col="v").collect()
     assert [r["id"] for r in top] == [1, 4]
